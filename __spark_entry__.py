@@ -107,15 +107,12 @@ _ROUND14_WINDOW = [
     "search_eval_mmr_arm",
 ]
 
-#: Round 15 front-loads the RE-PROOF block for the relation-cache
-#: migration (operators/relation_cache.py, VERDICT r14 §Next #3/#6):
-#: all six rec_* queries (model/item/eval-model frames moved to the
-#: fingerprinted driver memo; baskets/trans to the persisted scan
-#: tier) plus five graph representatives covering both memo variants
-#: and every kernel shape the shared ``_memoized_edges`` plumbing now
-#: routes through relation_cache (all 25 graph queries were re-proven
-#: hash-green via scripts/driver_dryrun.py --only at sf0.01 before
-#: handoff; the full-registry sweep covers the rest).  The 12 new
+#: Round 15 front-loads the RE-PROOF block for the derived-relation
+#: changes (VERDICT r14 §Next #3/#6): all six rec_* queries plus five
+#: graph representatives covering every kernel shape the shared edge
+#: derivation feeds (all 25 graph queries were re-proven hash-green
+#: via scripts/driver_dryrun.py --only at sf0.01 before handoff; the
+#: full-registry sweep covers the rest).  The 12 new
 #: round-15 queries (privacy 4, drift 4, survival 2, rec beyond-
 #: accuracy 2 — all 4-SF proven incl. sf1) slot in as never-proven,
 #: and the remaining 27 slots fill with the OLDEST-PROOF-FIRST

@@ -175,18 +175,21 @@ class Engine:
     def query(self, name: str) -> DataFrame:
         """Run a named operator query from the registry.
 
-        Cache-lifetime contract: some queries persist intermediates
-        (LSH band tables, vector norms) for the duration of their
-        execution. After the terminal action on the returned DataFrame,
-        call :meth:`release_caches` so a long-lived engine process does
-        not accumulate cached blocks across queries.
+        Cache-lifetime contract: some queries persist or checkpoint
+        intermediates (LSH band tables, vector norms, loop state) for
+        the duration of their execution. After the terminal action on
+        the returned DataFrame, call :meth:`release_caches` on the
+        thread that ran the query, so a long-lived engine process does
+        not accumulate cached blocks across queries. The blocks belong
+        to that thread: another thread's release leaves them alone.
         """
         from concurrent_etl_go_spark import operators
 
         return operators.QUERIES[name](self.spark, self.sf_dir)
 
     def release_caches(self) -> None:
-        """Unpersist intermediates cached by previously-run queries."""
+        """Unpersist intermediates cached by the queries this thread ran;
+        call it on the thread that ran the query."""
         from concurrent_etl_go_spark.operators.registry import release_caches
 
         release_caches()

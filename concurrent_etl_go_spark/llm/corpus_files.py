@@ -21,13 +21,15 @@ freed via ``release_caches()``.
 from __future__ import annotations
 
 import os
-import shutil
 import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from concurrent_etl_go_spark.operators.registry import query, track_cache
+from concurrent_etl_go_spark.operators.registry import (
+    query,
+    scoped_checkpoint,
+)
 from concurrent_etl_go_spark.sources.readers import (
     read_binary_files,
     read_table,
@@ -60,13 +62,6 @@ def _write_files(df: DataFrame, out_dir: str) -> None:
 
     os.makedirs(out_dir, exist_ok=True)
     df.foreachPartition(write_partition)
-
-
-def _checkpoint_and_drop(df: DataFrame, tmp_dir: str) -> DataFrame:
-    out = df.localCheckpoint(eager=True)
-    track_cache(out)
-    shutil.rmtree(tmp_dir, ignore_errors=True)
-    return out
 
 
 def _fname() -> F.Column:
@@ -126,24 +121,24 @@ def corpus_file_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
             "text",
         )
     )
-    tmp = tempfile.mkdtemp(prefix="cetl_corpus_files_")
-    _write_files(named, tmp)
+    with tempfile.TemporaryDirectory(prefix="cetl_corpus_files_") as tmp:
+        _write_files(named, tmp)
 
-    corpus = read_text_corpus(spark, tmp, pattern="*.txt")
-    deduped = (
-        corpus.select(_fname().alias("fname"), "text")
-        .groupBy("text")
-        .agg(
-            F.min("fname").alias("survivor"),
-            F.count(F.lit(1)).alias("n_copies"),
+        corpus = read_text_corpus(spark, tmp, pattern="*.txt")
+        deduped = (
+            corpus.select(_fname().alias("fname"), "text")
+            .groupBy("text")
+            .agg(
+                F.min("fname").alias("survivor"),
+                F.count(F.lit(1)).alias("n_copies"),
+            )
+            .select(
+                F.md5(F.col("text").cast("binary")).alias("text_md5"),
+                "survivor",
+                "n_copies",
+            )
         )
-        .select(
-            F.md5(F.col("text").cast("binary")).alias("text_md5"),
-            "survivor",
-            "n_copies",
-        )
-    )
-    return _checkpoint_and_drop(deduped, tmp)
+        return scoped_checkpoint(deduped)
 
 
 @query(
@@ -181,16 +176,16 @@ def multimodal_binary_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.format_string("blob_%06d.bin", F.col("doc_id")).alias("fname"),
         "text",
     )
-    tmp = tempfile.mkdtemp(prefix="cetl_binary_ingest_")
-    _write_files(named, tmp)
+    with tempfile.TemporaryDirectory(prefix="cetl_binary_ingest_") as tmp:
+        _write_files(named, tmp)
 
-    blobs = read_binary_files(spark, tmp, pattern="*.bin")
-    features = blobs.select(
-        _fname().alias("fname"),
-        F.col("length").alias("n_bytes"),
-        F.md5("content").alias("content_md5"),
-        F.length(F.decode(F.col("content"), "UTF-8"))
-        .cast("long")
-        .alias("n_chars"),
-    )
-    return _checkpoint_and_drop(features, tmp)
+        blobs = read_binary_files(spark, tmp, pattern="*.bin")
+        features = blobs.select(
+            _fname().alias("fname"),
+            F.col("length").alias("n_bytes"),
+            F.md5("content").alias("content_md5"),
+            F.length(F.decode(F.col("content"), "UTF-8"))
+            .cast("long")
+            .alias("n_chars"),
+        )
+        return scoped_checkpoint(features)

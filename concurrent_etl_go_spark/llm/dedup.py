@@ -392,7 +392,7 @@ def connected_components(
     """
     from concurrent_etl_go_spark.operators.registry import (
         release_df,
-        track_cache,
+        scoped_checkpoint,
     )
 
     edges = pairs.select(
@@ -445,13 +445,14 @@ def connected_components(
         # computes every partition of new_labels, so the checkpoint blocks
         # persist as a side effect of the probe (the eager form paid the
         # per-job scheduling floor twice per round)
-        new_labels = (
-            propagated.join(hop, propagated["component"] == hop["jid"], "left")
-            .select(
+        new_labels = scoped_checkpoint(
+            propagated.join(
+                hop, propagated["component"] == hop["jid"], "left"
+            ).select(
                 "id",
                 F.coalesce("jcomp", "component").alias("component"),
-            )
-            .localCheckpoint(eager=False)
+            ),
+            eager=False,
         )
         new_sum = new_labels.agg(label_sum).first()[0]  # only driver traffic
         release_df(storage)  # frees persist AND prior-round checkpoint blocks
@@ -469,9 +470,7 @@ def connected_components(
             "rounds — raise max_iterations (graph diameter exceeds 2^rounds)"
         )
     # the fixpoint labels stay checkpointed for the caller's terminal
-    # action; the OWNING frame is tracked so release_caches() frees the
-    # checkpoint blocks (not just the projection's SQL-cache entry)
-    track_cache(storage)
+    # action; release_caches() frees them
     return labels
 
 

@@ -227,7 +227,7 @@ def fit_ivfpq(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, dict]:
     job whose union carries the coarse per-(cluster, pos) means
     alongside the PQ per-(subspace, codeword, pos) means.  Both fits
     also share ONE persisted base and ONE seed collect (seeds + the
-    dimension probe + implicitly the query row for the serving query).
+    dimension probe).
     Same deterministic algorithm: id-ordered seeding, argmin ties break
     to the lowest codeword id (min_by over a (d2, j) struct — the
     ``ivfpq2._assignments`` idiom), coarse assignments produced by the
@@ -473,15 +473,17 @@ def similarity_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     import math
 
-    codes, meta = fit_ivfpq(spark, sf_dir)
-    centroids, codebooks = meta["centroids"], meta["codebooks"]
-    # the fit scoped-persisted exactly this (vec_id, v) plan, so the
-    # query-row lookup and the rerank below are cache reads (no second
-    # parquet scan + repartition exchange per use)
+    # probe the query row BEFORE fitting: an empty corpus has no seeds
+    # to fit, and answers with an empty top-k
     base = _vectors(spark, sf_dir).select("vec_id", "v")
     qrow = base.where(F.col("vec_id") == 0).first()
     if qrow is None or qrow.v is None:
         return spark.createDataFrame([], "vec_id long, sim double")
+    codes, meta = fit_ivfpq(spark, sf_dir)
+    centroids, codebooks = meta["centroids"], meta["codebooks"]
+    # the fit scoped-persisted exactly this (vec_id, v) plan, so the
+    # rerank below is a cache read (no second parquet scan +
+    # repartition exchange)
     q = list(qrow.v)
     # left-fold sum in array order, then IEEE sqrt — bit-identical to
     # the sqrt(dot(v, v)) norm column ``_vectors`` computes per row

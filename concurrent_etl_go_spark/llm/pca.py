@@ -166,6 +166,9 @@ def embeddings_top_component(
             for i, js in gmap.items()
         }
         m = max(abs(v) for v in raw.values())
+        if m == 0:  # all-zero Gram matrix: no principal direction
+            x = dict.fromkeys(raw, 0)
+            break
         x = {
             i: (s - (s % m)) // m
             for i, s in ((i, v * _X_SCALE) for i, v in raw.items())

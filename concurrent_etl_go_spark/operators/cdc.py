@@ -35,13 +35,15 @@ the caller's terminal action.
 
 from __future__ import annotations
 
-import shutil
 import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from concurrent_etl_go_spark.operators.registry import query, track_cache
+from concurrent_etl_go_spark.operators.registry import (
+    query,
+    scoped_checkpoint,
+)
 from concurrent_etl_go_spark.sources import versioned as vt
 from concurrent_etl_go_spark.sources.readers import read_table
 
@@ -69,17 +71,6 @@ def _base_and_updates(
     return base, ups
 
 
-def _checkpoint_and_drop(df: DataFrame, *tmp_dirs: str) -> DataFrame:
-    """Materialize the (small, O(changes)) result into block storage so
-    the scratch table files can be deleted immediately; the blocks are
-    registered for ``release_caches()``."""
-    out = df.localCheckpoint(eager=True)
-    track_cache(out)
-    for d in tmp_dirs:
-        shutil.rmtree(d, ignore_errors=True)
-    return out
-
-
 @query(
     "cdc_table_changes",
     oracle=f"""
@@ -104,14 +95,14 @@ def cdc_table_changes(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``orders``; a diff that missed an update pair, leaked an unchanged
     row from a rewritten file, or double-counted would hash-mismatch.
     """
-    tmp = tempfile.mkdtemp(prefix="cetl_cdc_src_")
-    base, ups = _base_and_updates(spark, sf_dir)
-    vt.write_table(base, tmp)                      # v1
-    vt.merge_upsert(spark, tmp, ups, key="o_orderkey")  # v2
-    changes = vt.table_changes(spark, tmp, 1, 2).select(
-        *_COLS, F.col("_change_type").alias("change_type")
-    )
-    return _checkpoint_and_drop(changes, tmp)
+    with tempfile.TemporaryDirectory(prefix="cetl_cdc_src_") as tmp:
+        base, ups = _base_and_updates(spark, sf_dir)
+        vt.write_table(base, tmp)                      # v1
+        vt.merge_upsert(spark, tmp, ups, key="o_orderkey")  # v2
+        changes = vt.table_changes(spark, tmp, 1, 2).select(
+            *_COLS, F.col("_change_type").alias("change_type")
+        )
+        return scoped_checkpoint(changes)
 
 
 @query(
@@ -136,27 +127,29 @@ def cdc_apply_changes(spark: SparkSession, sf_dir: str) -> DataFrame:
     not just the diff's shape. This is the batch core of
     ``sources/mirror.py``'s ``cdc`` mode.
     """
-    src = tempfile.mkdtemp(prefix="cetl_cdc_src_")
-    dst = tempfile.mkdtemp(prefix="cetl_cdc_dst_")
-    base, ups = _base_and_updates(spark, sf_dir)
-    # the two v1 writes are independent jobs over the same frame —
-    # submit them from driver threads so the second's tasks back-fill
-    # executors freed by the first's tail (guide §2.6); each call
-    # commits its own table directory, so there is no shared state
-    from concurrent.futures import ThreadPoolExecutor
+    with (
+        tempfile.TemporaryDirectory(prefix="cetl_cdc_src_") as src,
+        tempfile.TemporaryDirectory(prefix="cetl_cdc_dst_") as dst,
+    ):
+        base, ups = _base_and_updates(spark, sf_dir)
+        # the two v1 writes are independent jobs over the same frame —
+        # submit them from driver threads so the second's tasks back-fill
+        # executors freed by the first's tail (guide §2.6); each call
+        # commits its own table directory, so there is no shared state
+        from concurrent.futures import ThreadPoolExecutor
 
-    with ThreadPoolExecutor(max_workers=2) as pool:
-        futs = [
-            pool.submit(vt.write_table, base, src),   # src v1
-            pool.submit(vt.write_table, base, dst),   # replica of v1
-        ]
-        for f in futs:
-            f.result()
-    vt.merge_upsert(spark, src, ups, key="o_orderkey")  # src v2
-    changes = vt.table_changes(spark, src, 1, 2)
-    vt.apply_changes(spark, dst, changes, key="o_orderkey", batch_id=-2)
-    replica = vt.read_table_version(spark, dst).select(*_COLS)
-    return _checkpoint_and_drop(replica, src, dst)
+        with ThreadPoolExecutor(max_workers=2) as pool:
+            futs = [
+                pool.submit(vt.write_table, base, src),   # src v1
+                pool.submit(vt.write_table, base, dst),   # replica of v1
+            ]
+            for f in futs:
+                f.result()
+        vt.merge_upsert(spark, src, ups, key="o_orderkey")  # src v2
+        changes = vt.table_changes(spark, src, 1, 2)
+        vt.apply_changes(spark, dst, changes, key="o_orderkey", batch_id=-2)
+        replica = vt.read_table_version(spark, dst).select(*_COLS)
+        return scoped_checkpoint(replica)
 
 
 @query(
@@ -186,29 +179,31 @@ def cdc_mirror_replicate(spark: SparkSession, sf_dir: str) -> DataFrame:
     everywhere would converge to the same rows but flip the mode half
     of the hash.
     """
-    src = tempfile.mkdtemp(prefix="cetl_mirror_src_")
-    dst = tempfile.mkdtemp(prefix="cetl_mirror_dst_")
     from concurrent_etl_go_spark.sources.mirror import mirror_table
 
-    orders = read_table(spark, sf_dir, "orders").select(
-        "o_orderkey", "o_custkey"
-    )
-    modes = []
-    vt.write_table(orders.where(F.col("o_orderkey") % 2 == 0), src)  # v1
-    modes.append(mirror_table(spark, src, dst, key="o_orderkey")[1])
-    vt.write_table(
-        orders.where(F.col("o_orderkey") % 2 == 1), src, mode="append"
-    )  # v2
-    modes.append(mirror_table(spark, src, dst, key="o_orderkey")[1])
-    ups = orders.where(F.col("o_orderkey") % 3 == 0).withColumn(
-        "o_custkey", F.col("o_custkey") + F.lit(1_000_000)
-    )
-    vt.merge_upsert(spark, src, ups, key="o_orderkey")               # v3
-    modes.append(mirror_table(spark, src, dst, key="o_orderkey")[1])
+    with (
+        tempfile.TemporaryDirectory(prefix="cetl_mirror_src_") as src,
+        tempfile.TemporaryDirectory(prefix="cetl_mirror_dst_") as dst,
+    ):
+        orders = read_table(spark, sf_dir, "orders").select(
+            "o_orderkey", "o_custkey"
+        )
+        modes = []
+        vt.write_table(orders.where(F.col("o_orderkey") % 2 == 0), src)  # v1
+        modes.append(mirror_table(spark, src, dst, key="o_orderkey")[1])
+        vt.write_table(
+            orders.where(F.col("o_orderkey") % 2 == 1), src, mode="append"
+        )  # v2
+        modes.append(mirror_table(spark, src, dst, key="o_orderkey")[1])
+        ups = orders.where(F.col("o_orderkey") % 3 == 0).withColumn(
+            "o_custkey", F.col("o_custkey") + F.lit(1_000_000)
+        )
+        vt.merge_upsert(spark, src, ups, key="o_orderkey")               # v3
+        modes.append(mirror_table(spark, src, dst, key="o_orderkey")[1])
 
-    replica = vt.read_table_version(spark, dst).select(
-        "o_orderkey",
-        "o_custkey",
-        F.lit("|".join(modes)).alias("sync_modes"),
-    )
-    return _checkpoint_and_drop(replica, src, dst)
+        replica = vt.read_table_version(spark, dst).select(
+            "o_orderkey",
+            "o_custkey",
+            F.lit("|".join(modes)).alias("sync_modes"),
+        )
+        return scoped_checkpoint(replica)

@@ -21,7 +21,8 @@ from concurrent_etl_go_spark.operators.registry import (
     checkpoint_count,
     query,
     release_df,
-    track_cache,
+    scoped_checkpoint,
+    scoped_persist,
 )
 from concurrent_etl_go_spark.sources.readers import read_table
 
@@ -43,8 +44,9 @@ def pagerank(
     sym = edges.union(
         edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
     )
-    deg = sym.groupBy("src").agg(F.count(F.lit(1)).alias("deg")).persist()
-    track_cache(deg)
+    deg = scoped_persist(
+        sym.groupBy("src").agg(F.count(F.lit(1)).alias("deg"))
+    )
 
     ranks = deg.select(F.col("src").alias("id"), F.lit(1.0).alias("rank"))
     storage = None
@@ -59,18 +61,18 @@ def pagerank(
             .groupBy("id")
             .agg(F.sum("c").alias("inflow"))
         )
-        new_ranks = contrib.select(
-            "id",
-            (F.lit(1.0 - damping) + F.lit(damping) * F.col("inflow")).alias(
-                "rank"
-            ),
-        ).localCheckpoint(eager=True)
+        new_ranks = scoped_checkpoint(
+            contrib.select(
+                "id",
+                (
+                    F.lit(1.0 - damping) + F.lit(damping) * F.col("inflow")
+                ).alias("rank"),
+            )
+        )
         if storage is not None:
             release_df(storage)
         storage = new_ranks
         ranks = new_ranks
-    if storage is not None:
-        track_cache(storage)
     # rounded for display; rank mass (pre-round) sums to n_nodes
     return ranks.select("id", F.round("rank", 4).alias("rank"))
 
@@ -161,12 +163,10 @@ def kcore_peel(
             .where(F.col("deg") >= min_degree)
             .select(F.col("src").alias("id"))
         )
-        cur = (
+        cur = scoped_checkpoint(
             cur.join(keep, cur["src"] == keep["id"], "left_semi")
             .join(keep, cur["dst"] == keep["id"], "left_semi")
-            .localCheckpoint(eager=True)
         )
-        track_cache(cur)
     return cur.groupBy(F.col("src").alias("id")).agg(
         F.count(F.lit(1)).alias("degree")
     )
@@ -206,16 +206,13 @@ def label_propagation(edges: DataFrame, rounds: int = 4) -> DataFrame:
             .groupBy("nid", "lbl")
             .agg(F.count(F.lit(1)).alias("c"))
         )
-        labels = (
-            cnt.groupBy(F.col("nid").alias("id"))
-            .agg(
+        labels = scoped_checkpoint(
+            cnt.groupBy(F.col("nid").alias("id")).agg(
                 F.min_by(
                     "lbl", F.struct((-F.col("c")).alias("nc"), F.col("lbl"))
                 ).alias("lbl")
             )
-            .localCheckpoint(eager=True)
         )
-        track_cache(labels)
     return labels.select("id", F.col("lbl").alias("label"))
 
 
@@ -269,12 +266,11 @@ def sssp_weighted(
         )
         if n_improved == 0:
             break
-        dist = (
+        dist = scoped_checkpoint(
             dist.unionByName(improved)
             .groupBy("id")
-            .agg(F.min("dist").alias("dist"))
-            .localCheckpoint(eager=False)
+            .agg(F.min("dist").alias("dist")),
+            eager=False,
         )
-        track_cache(dist)
         frontier = improved
     return dist

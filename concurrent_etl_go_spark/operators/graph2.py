@@ -34,8 +34,8 @@ from concurrent_etl_go_spark.operators.lib import parallelize_narrow_scan
 from concurrent_etl_go_spark.operators.registry import (
     query,
     release_df,
+    scoped_checkpoint,
     scoped_persist,
-    track_cache,
 )
 from concurrent_etl_go_spark.sources.readers import read_table
 
@@ -848,9 +848,8 @@ def graph_ppr(spark: SparkSession, sf_dir: str) -> DataFrame:
             .groupBy("id")
             .agg(F.sum("c").alias("inflow"))
         )
-        new_ranks = (
-            nodes.join(inflow, "id", "left")
-            .select(
+        new_ranks = scoped_checkpoint(
+            nodes.join(inflow, "id", "left").select(
                 "id",
                 (
                     F.lit(1 - _PPR_DAMPING) * is_src
@@ -858,14 +857,11 @@ def graph_ppr(spark: SparkSession, sf_dir: str) -> DataFrame:
                     * F.coalesce(F.col("inflow"), F.lit(0.0))
                 ).alias("rank"),
             )
-            .localCheckpoint(eager=True)
         )
         if storage is not None:
             release_df(storage)
         storage = new_ranks
         ranks = new_ranks
-    if storage is not None:
-        track_cache(storage)
     return ranks.select(
         "id", (F.round("rank", 6) + F.lit(0.0)).alias("rank")
     )
@@ -950,18 +946,16 @@ def graph_hits(spark: SparkSession, sf_dir: str) -> DataFrame:
     a = nodes.select("id", F.lit(1).cast("long").alias("a"))
     h = None
     for _ in range(_HITS_ROUNDS):
-        h = (
+        h = scoped_checkpoint(
             e.join(a, e["dst"] == a["id"])
             .groupBy(e["src"].alias("id"))
             .agg(F.sum("a").alias("h"))
-            .localCheckpoint(eager=True)
         )
-        a = (
+        a = scoped_checkpoint(
             e.join(h.select(F.col("id").alias("hid"), "h"),
                    e["src"] == F.col("hid"))
             .groupBy(e["dst"].alias("id"))
             .agg(F.sum("h").alias("a"))
-            .localCheckpoint(eager=True)
         )
     out = (
         nodes.join(h.select(F.col("id").alias("id"), "h"), "id", "left")

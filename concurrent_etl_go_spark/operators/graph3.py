@@ -40,7 +40,7 @@ from concurrent_etl_go_spark.operators.graph2 import (
 from concurrent_etl_go_spark.operators.registry import (
     checkpoint_count,
     query,
-    track_cache,
+    scoped_checkpoint,
 )
 
 _CC_SOURCES = 5
@@ -62,10 +62,11 @@ def multi_source_bfs(
     sym = edges.union(
         edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
     )
-    dist = sources.select(
-        "sid", F.col("sid").alias("id"), F.lit(0).cast("long").alias("dist")
-    ).localCheckpoint(eager=True)
-    track_cache(dist)
+    dist = scoped_checkpoint(
+        sources.select(
+            "sid", F.col("sid").alias("id"), F.lit(0).cast("long").alias("dist")
+        )
+    )
     frontier = dist
     for k in range(1, max_hops + 1):
         # one job per round: the frontier count doubles as the emptiness
@@ -298,35 +299,30 @@ def graph_betweenness_sampled(
         .distinct()
     )
     sources = sym_nodes.orderBy("sid").limit(_BC_SOURCES)
-    lvl = (
+    lvl = scoped_checkpoint(
         sources.select(
             "sid",
             F.col("sid").alias("id"),
             F.lit(1).cast("long").alias("sigma"),
         )
-        .localCheckpoint(eager=True)
     )
-    track_cache(lvl)
     levels = [lvl]
     settled = lvl.select("sid", "id")
     for _ in range(1, _BC_HOPS + 1):
-        nxt = (
+        nxt = scoped_checkpoint(
             levels[-1].join(sym, levels[-1]["id"] == sym["src"])
             .select("sid", F.col("dst").alias("id"), "sigma")
             .groupBy("sid", "id")
             .agg(F.sum("sigma").cast("long").alias("sigma"))
             .join(settled, ["sid", "id"], "left_anti")
-            .localCheckpoint(eager=True)
         )
-        track_cache(nxt)
         levels.append(nxt)
         settled = settled.unionByName(nxt.select("sid", "id"))
     deltas = [
-        levels[_BC_HOPS].select(
-            "sid", "id", F.lit(0.0).alias("delta")
-        ).localCheckpoint(eager=True)
+        scoped_checkpoint(
+            levels[_BC_HOPS].select("sid", "id", F.lit(0.0).alias("delta"))
+        )
     ]
-    track_cache(deltas[0])
     d_next = deltas[0]
     for k in range(_BC_HOPS - 1, 0, -1):
         v = levels[k]
@@ -355,7 +351,7 @@ def graph_betweenness_sampled(
             .groupBy("sid", "id")
             .agg(F.sum("c").alias("contrib"))
         )
-        d_k = (
+        d_k = scoped_checkpoint(
             v.select("sid", "id")
             .join(contrib, ["sid", "id"], "left")
             .select(
@@ -363,9 +359,7 @@ def graph_betweenness_sampled(
                 "id",
                 F.coalesce(F.col("contrib"), F.lit(0.0)).alias("delta"),
             )
-            .localCheckpoint(eager=True)
         )
-        track_cache(d_k)
         deltas.append(d_k)
         d_next = d_k
     alldeltas = deltas[0]

@@ -32,6 +32,7 @@ from concurrent_etl_go_spark.operators.graph2 import (
 from concurrent_etl_go_spark.operators.registry import (
     query,
     release_df,
+    scoped_checkpoint,
 )
 
 #: Katz constants: attenuation 1/20 (well under 1/lambda_max for the
@@ -231,13 +232,15 @@ def graph_katz_centrality(spark: SparkSession, sf_dir: str) -> DataFrame:
             .groupBy(F.col("dst").alias("id"))
             .agg(F.sum("katz").alias("s"))
         )
-        x = nodes.join(inflow, "id", "left").select(
-            "id",
-            F.expr(
-                f"CAST(1000000 + COALESCE(s, 0) div {_KATZ_DIV}"
-                f" AS BIGINT)"
-            ).alias("katz"),
-        ).localCheckpoint(eager=True)
+        x = scoped_checkpoint(
+            nodes.join(inflow, "id", "left").select(
+                "id",
+                F.expr(
+                    f"CAST(1000000 + COALESCE(s, 0) div {_KATZ_DIV}"
+                    f" AS BIGINT)"
+                ).alias("katz"),
+            )
+        )
         if storage is not None:
             release_df(storage)
         storage = x

@@ -21,6 +21,7 @@ Convention for oracle safety (see SURVEY §7.4.6):
 
 from __future__ import annotations
 
+import threading
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
@@ -92,30 +93,44 @@ SCALE_CLASS: dict[str, str] = {}
 SCALE_CLASSES = ("production", "oracle_twin")
 
 
-#: DataFrames persisted inside registered queries, awaiting release.
-#: Registered queries return LAZY DataFrames, so a cache created inside a
-#: query function cannot be unpersisted before the caller's terminal
-#: action — instead it is tracked here and the caller (Engine, bench, the
-#: test harness) releases it after materializing.  A long-lived engine
-#: process serving many queries calls ``release_caches()`` between
-#: queries; otherwise each invocation would leak cached blocks into the
-#: shared session (they are evictable, but pin executor memory until
-#: eviction).
-_SCOPED_CACHES: list[DataFrame] = []
+class _Pinned(threading.local):
+    """Blocks pinned by query functions on this thread, awaiting release.
+
+    Registered queries return LAZY DataFrames, so a persist or
+    localCheckpoint made inside a query function cannot be dropped before
+    the caller's terminal action — it is recorded here and the caller
+    (Engine, bench, the test harness) releases it after materializing.
+    The list is per thread: concurrent clients of one session each own
+    the blocks their own queries pinned, so call ``release_caches()`` on
+    the thread that ran the query.  A long-lived engine process calls it
+    between queries; otherwise each invocation would leak blocks into
+    the shared session (evictable, but pinning executor memory until
+    eviction)."""
+
+    def __init__(self) -> None:
+        self.frames: list[DataFrame] = []
+
+
+_PINNED = _Pinned()
 
 
 def scoped_persist(df: DataFrame) -> DataFrame:
     """Persist ``df`` for the duration of the current query's execution and
-    track it for ``release_caches()``."""
+    record it for ``release_caches()``."""
     df.persist()
-    _SCOPED_CACHES.append(df)
+    _PINNED.frames.append(df)
     return df
 
 
-def track_cache(df: DataFrame) -> DataFrame:
-    """Track an already-persisted DataFrame for ``release_caches()``."""
-    _SCOPED_CACHES.append(df)
-    return df
+def scoped_checkpoint(df: DataFrame, eager: bool = True) -> DataFrame:
+    """``df.localCheckpoint(eager)``, recorded for ``release_caches()``.
+
+    The eager form materializes now, so files ``df`` reads may be deleted
+    once it returns; the lazy form persists its blocks as a side effect
+    of the next action over the result."""
+    out = df.localCheckpoint(eager=eager)
+    _PINNED.frames.append(out)
+    return out
 
 
 def checkpoint_count(df: DataFrame) -> tuple[DataFrame, int]:
@@ -127,12 +142,9 @@ def checkpoint_count(df: DataFrame) -> tuple[DataFrame, int]:
     loop round — at dimension scale each job pays the fixed
     stage-scheduling floor, so fixpoint loops (BFS frontier, SSSP delta,
     pointer-jumping CC) were paying the floor twice per round for one
-    round's work.  The checkpointed frame is tracked for
-    ``release_caches()``."""
-    out = df.localCheckpoint(eager=False)
-    n = out.count()
-    _SCOPED_CACHES.append(out)
-    return out, n
+    round's work."""
+    out = scoped_checkpoint(df, eager=False)
+    return out, out.count()
 
 
 def release_df(df: DataFrame) -> None:
@@ -153,10 +165,12 @@ def release_df(df: DataFrame) -> None:
 
 
 def release_caches() -> None:
-    """Unpersist every cache created by query functions since the last
-    release. Call after the terminal action on a query's DataFrame."""
-    while _SCOPED_CACHES:
-        release_df(_SCOPED_CACHES.pop())
+    """Unpersist every block the calling thread's query functions pinned
+    since its last release. Call after the terminal action on a query's
+    DataFrame, on the thread that ran the query."""
+    frames = _PINNED.frames
+    while frames:
+        release_df(frames.pop())
 
 
 def query(

@@ -27,7 +27,11 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from concurrent_etl_go_spark.operators.registry import query
+from concurrent_etl_go_spark.operators.registry import (
+    query,
+    scoped_checkpoint,
+    scoped_persist,
+)
 from concurrent_etl_go_spark.llm.text import tokens
 from concurrent_etl_go_spark.sources.readers import read_table
 
@@ -457,8 +461,6 @@ def search_mmr_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``MMR_SHORTLIST``-row shortlist — the k x k pairwise matrix and
     ``MMR_SELECT`` constant-size join rounds are O(k²) on ~constant
     k, independent of corpus size."""
-    from concurrent_etl_go_spark.operators.registry import scoped_persist
-
     iv = read_table(spark, sf_dir, "embeddings").select(
         "vec_id",
         F.expr(
@@ -498,7 +500,7 @@ def search_mmr_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     # through the growing `selected` union — a 2^k lineage blowup the
     # audit showed as hundreds of phantom join nodes.  The picks are
     # one-row frames, so materializing them is free.
-    pick = (
+    pick = scoped_checkpoint(
         short.orderBy("d2", "doc_id")
         .limit(1)
         .select(
@@ -507,7 +509,6 @@ def search_mmr_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
             "d2",
             F.lit(None).cast("long").alias("mmr"),
         )
-        .localCheckpoint(eager=True)
     )
     picks = [pick]
     selected = pick.select("doc_id")
@@ -529,7 +530,7 @@ def search_mmr_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
                 (F.col("novelty") - F.col("d2")).alias("mmr"),
             )
         )
-        nxt = (
+        nxt = scoped_checkpoint(
             scored.orderBy(F.desc("mmr"), "doc_id")
             .limit(1)
             .select(
@@ -538,7 +539,6 @@ def search_mmr_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "d2",
                 F.col("mmr").cast("long").alias("mmr"),
             )
-            .localCheckpoint(eager=True)
         )
         picks.append(nxt)
         selected = selected.unionByName(nxt.select("doc_id"))

@@ -11,24 +11,18 @@ so the scratch roots can be deleted before returning.
 
 from __future__ import annotations
 
-import shutil
 import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from concurrent_etl_go_spark.operators.registry import query, track_cache
+from concurrent_etl_go_spark.operators.registry import (
+    query,
+    scoped_checkpoint,
+)
 from concurrent_etl_go_spark.sources import versioned as vt
 from concurrent_etl_go_spark.sources.ivm import refresh_rollup
 from concurrent_etl_go_spark.sources.readers import read_table
-
-
-def _checkpoint_and_drop(df: DataFrame, *tmp_dirs: str) -> DataFrame:
-    out = df.localCheckpoint(eager=True)
-    track_cache(out)
-    for d in tmp_dirs:
-        shutil.rmtree(d, ignore_errors=True)
-    return out
 
 
 @query(
@@ -58,20 +52,22 @@ def ivm_incremental_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     key; the proof rides the same code path production does.
     """
     events = read_table(spark, sf_dir, "events")
-    src = tempfile.mkdtemp(prefix="cetl_ivm_src_")
-    rollup = tempfile.mkdtemp(prefix="cetl_ivm_rollup_")
-    for part in range(3):
-        vt.write_table(
-            events.where(F.col("event_id") % 3 == part), src, mode="append"
+    with (
+        tempfile.TemporaryDirectory(prefix="cetl_ivm_src_") as src,
+        tempfile.TemporaryDirectory(prefix="cetl_ivm_rollup_") as rollup,
+    ):
+        for part in range(3):
+            vt.write_table(
+                events.where(F.col("event_id") % 3 == part), src, mode="append"
+            )
+            refresh_rollup(spark, src, rollup)
+        out = vt.read_table_version(spark, rollup).select(
+            "event_type",
+            "day",
+            "n_events",
+            (F.round("total_value", 4) + F.lit(0.0)).alias("total_value"),
         )
-        refresh_rollup(spark, src, rollup)
-    out = vt.read_table_version(spark, rollup).select(
-        "event_type",
-        "day",
-        "n_events",
-        (F.round("total_value", 4) + F.lit(0.0)).alias("total_value"),
-    )
-    return _checkpoint_and_drop(out, src, rollup)
+        return scoped_checkpoint(out)
 
 
 @query(
@@ -97,24 +93,26 @@ def ivm_rollup_after_compact(spark: SparkSession, sf_dir: str) -> DataFrame:
     must resume the incremental path cleanly.
     """
     events = read_table(spark, sf_dir, "events")
-    src = tempfile.mkdtemp(prefix="cetl_ivmc_src_")
-    rollup = tempfile.mkdtemp(prefix="cetl_ivmc_rollup_")
-    thirds = [events.where(F.col("event_id") % 3 == p) for p in range(3)]
-    vt.write_table(thirds[0], src, mode="append")
-    refresh_rollup(spark, src, rollup)
-    vt.write_table(thirds[1], src, mode="append")
-    refresh_rollup(spark, src, rollup)
-    vt.compact(spark, src, target_files=2)   # full rewrite, zero new rows
-    refresh_rollup(spark, src, rollup)       # must recompute, not merge
-    vt.write_table(thirds[2], src, mode="append")
-    refresh_rollup(spark, src, rollup)       # incremental again
-    out = vt.read_table_version(spark, rollup).select(
-        "event_type",
-        "day",
-        "n_events",
-        (F.round("total_value", 4) + F.lit(0.0)).alias("total_value"),
-    )
-    return _checkpoint_and_drop(out, src, rollup)
+    with (
+        tempfile.TemporaryDirectory(prefix="cetl_ivmc_src_") as src,
+        tempfile.TemporaryDirectory(prefix="cetl_ivmc_rollup_") as rollup,
+    ):
+        thirds = [events.where(F.col("event_id") % 3 == p) for p in range(3)]
+        vt.write_table(thirds[0], src, mode="append")
+        refresh_rollup(spark, src, rollup)
+        vt.write_table(thirds[1], src, mode="append")
+        refresh_rollup(spark, src, rollup)
+        vt.compact(spark, src, target_files=2)   # full rewrite, zero new rows
+        refresh_rollup(spark, src, rollup)       # must recompute, not merge
+        vt.write_table(thirds[2], src, mode="append")
+        refresh_rollup(spark, src, rollup)       # incremental again
+        out = vt.read_table_version(spark, rollup).select(
+            "event_type",
+            "day",
+            "n_events",
+            (F.round("total_value", 4) + F.lit(0.0)).alias("total_value"),
+        )
+        return scoped_checkpoint(out)
 
 
 @query(
@@ -153,27 +151,27 @@ def versioned_time_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
     summaries are single aggregates.
     """
     orders = read_table(spark, sf_dir, "orders").select("o_orderkey")
-    root = tempfile.mkdtemp(prefix="cetl_timetravel_")
-    vt.write_table(orders.where(F.col("o_orderkey") % 2 == 0), root)  # v1
-    vt.write_table(
-        orders.where(F.col("o_orderkey") % 2 == 1), root, mode="append"
-    )  # v2
-    vt.compact(spark, root, target_files=2)  # v3: same rows, fewer files
-    vt.restore_table(root, 1)  # v4: back to evens, zero-copy
+    with tempfile.TemporaryDirectory(prefix="cetl_timetravel_") as root:
+        vt.write_table(orders.where(F.col("o_orderkey") % 2 == 0), root)  # v1
+        vt.write_table(
+            orders.where(F.col("o_orderkey") % 2 == 1), root, mode="append"
+        )  # v2
+        vt.compact(spark, root, target_files=2)  # v3: same rows, fewer files
+        vt.restore_table(root, 1)  # v4: back to evens, zero-copy
 
-    out = None
-    for version, label in (
-        (1, "v1_base"),
-        (2, "v2_append"),
-        (3, "v3_compact"),
-        (4, "v4_restore"),
-    ):
-        snap_df = vt.read_table_version(spark, root, version).agg(
-            F.count(F.lit(1)).alias("n_rows"),
-            F.sum("o_orderkey").alias("key_sum"),
-        )
-        one = snap_df.select(
-            F.lit(label).alias("snapshot_label"), "n_rows", "key_sum"
-        )
-        out = one if out is None else out.unionByName(one)
-    return _checkpoint_and_drop(out, root)
+        out = None
+        for version, label in (
+            (1, "v1_base"),
+            (2, "v2_append"),
+            (3, "v3_compact"),
+            (4, "v4_restore"),
+        ):
+            snap_df = vt.read_table_version(spark, root, version).agg(
+                F.count(F.lit(1)).alias("n_rows"),
+                F.sum("o_orderkey").alias("key_sum"),
+            )
+            one = snap_df.select(
+                F.lit(label).alias("snapshot_label"), "n_rows", "key_sum"
+            )
+            out = one if out is None else out.unionByName(one)
+        return scoped_checkpoint(out)

@@ -17,7 +17,7 @@ SF_CORRECTNESS = "/root/testdata/sf0.01"
 def spark():
     from concurrent_etl_go_spark.session import get_spark
 
-    cpus = os.environ.get("SPARK_GRAFT_TEST_CPUS", "8")
+    cpus = os.environ.get("SPARK_GRAFT_CPUS", "8")
     spark = get_spark(
         app_name="engine-tests",
         master=f"local[{cpus}]",

@@ -117,187 +117,32 @@ def test_sweep_spares_live_spill_sidecar_toctou(mock_api, tmp_path):
 
 
 # ---------------------------------------------------------------------------
-# 2. relation_cache machinery (production build-offline/serve-cheap
-#    split).  Optimization round 15 REMOVED this cache from every
-#    registry-query path — a bench/oracle invocation must compute from
-#    the parquet inputs, so cross-run persisted intermediates and
-#    driver-side result memos are prohibited there.  The machinery
-#    itself stays (it is the versioned-table serving pattern real
-#    pipelines use), exercised here with synthetic relations only.
+# 2. Derived relations are computed fresh per invocation, so two
+#    invocations must agree.
 # ---------------------------------------------------------------------------
 
 
-@pytest.fixture()
-def cache_root(tmp_path, monkeypatch):
-    """Isolate the persisted relation tables AND the memo in tmp_path."""
-    from concurrent_etl_go_spark.operators import relation_cache
-
-    monkeypatch.setattr(
-        relation_cache,
-        "table_root",
-        lambda sf_dir, name: str(tmp_path / "relcache" / name),
-    )
-    monkeypatch.setattr(relation_cache, "_MEMO", {})
-    return relation_cache
-
-
-def _synthetic_build(spark, calls):
-    def build():
-        calls["n"] += 1
-        return spark.range(5).selectExpr("id AS src", "id + 1 AS dst")
-
-    return build
-
-
-def test_relation_cache_build_then_pure_read(spark, sf_dir, cache_root):
-    """First call derives + persists; a cold-process load (memo cleared)
-    is a pure read — identical rows, no new table version, no rebuild."""
-    import concurrent_etl_go_spark.sources.versioned as vt
-
-    relation_cache = cache_root
-    calls = {"n": 0}
-    build = _synthetic_build(spark, calls)
-    first = sorted(
-        (r.src, r.dst)
-        for r in relation_cache.memoized_local(
-            spark, sf_dir, "syn_rel", ("lineitem",), build, tag="v1"
-        ).collect()
-    )
-    assert first and calls["n"] == 1
-    root = relation_cache.table_root(sf_dir, "syn_rel")
-    v0 = vt.snapshot(os.path.join(root, "data")).version
-
-    relation_cache._MEMO.clear()  # simulate a fresh process
-    again = sorted(
-        (r.src, r.dst)
-        for r in relation_cache.memoized_local(
-            spark, sf_dir, "syn_rel", ("lineitem",), build, tag="v1"
-        ).collect()
-    )
-    assert again == first
-    assert calls["n"] == 1, "fresh-fingerprint reload must be a pure read"
-    assert vt.snapshot(os.path.join(root, "data")).version == v0
-
-
-def test_relation_cache_stale_fingerprint_rebuilds(spark, sf_dir, cache_root):
-    """A fingerprint mismatch (refreshed source parquet) forces a
-    re-derive into a NEW table version."""
-    import json as _json
-
-    relation_cache = cache_root
-    calls = {"n": 0}
-    build = _synthetic_build(spark, calls)
-    relation_cache.load_or_build(
-        spark, sf_dir, "syn_rel2", ("lineitem",), build, tag="v1"
-    )
-    root = relation_cache.table_root(sf_dir, "syn_rel2")
-    meta_path = os.path.join(root, "meta.json")
-    with open(meta_path) as fh:
-        meta = _json.load(fh)
-    v0 = meta["version"]
-    meta["fingerprint"] = [0, 0, 0, 0]
-    with open(meta_path, "w") as fh:
-        _json.dump(meta, fh)
-
-    relation_cache.load_or_build(
-        spark, sf_dir, "syn_rel2", ("lineitem",), build, tag="v1"
-    )
-    assert calls["n"] == 2, "stale fingerprint must trigger a rebuild"
-    with open(meta_path) as fh:
-        assert _json.load(fh)["version"] > v0
-
-
-def test_memo_keyed_by_source_fingerprint(spark, sf_dir, cache_root):
-    """The memo key folds in the source fingerprint and derivation tag,
-    so touching the source parquet (or changing the derivation) evicts
-    the in-process entry instead of silently serving stale rows."""
-    relation_cache = cache_root
-    calls = {"n": 0}
-    relation_cache.memoized_local(
-        spark, sf_dir, "syn_rel3", ("lineitem",),
-        _synthetic_build(spark, calls), tag="vX",
-    )
-    (key,) = list(relation_cache._MEMO)
-    assert key[0] == sf_dir and key[1] == "syn_rel3"
-    fp, tag = key[2]
-    assert fp == tuple(
-        relation_cache.source_fingerprint(sf_dir, ("lineitem",))
-    ), "memo key must carry the live source fingerprint"
-    assert tag == "vX", "memo key must carry the derivation tag"
-
-
-def test_query_paths_do_not_touch_relation_cache(spark, sf_dir, cache_root):
-    """Optimization round 15: registry queries must compute from the
-    parquet inputs on EVERY invocation — no persisted-relation reads or
-    writes, no driver-side result memo.  Run the former cache consumers
-    (graph edges via a graph query, the recommender model) end to end
-    and assert the isolated cache root stays empty and the memo stays
-    unused — and that two invocations agree (fresh derivation is
-    deterministic)."""
+def test_derived_relations_agree_across_invocations(spark, sf_dir):
+    """The co-purchase edge list and the recommender's item-neighbor
+    model are re-derived by every query that reads them; two
+    invocations return the same rows."""
     from concurrent_etl_go_spark.operators import graph2, recommender
     from concurrent_etl_go_spark.operators.registry import release_caches
 
-    relation_cache = cache_root
-    first = sorted(
-        (r.src, r.dst)
-        for r in graph2._copurchase_edges(spark, sf_dir).collect()
-    )
-    release_caches()
-    rec1 = sorted(
-        map(tuple, recommender.rec_item_neighbors(spark, sf_dir).collect())
-    )
-    release_caches()
-    again = sorted(
-        (r.src, r.dst)
-        for r in graph2._copurchase_edges(spark, sf_dir).collect()
-    )
-    release_caches()
-    rec2 = sorted(
-        map(tuple, recommender.rec_item_neighbors(spark, sf_dir).collect())
-    )
-    release_caches()
-    assert first == again and rec1 == rec2
+    def edges():
+        rows = graph2._copurchase_edges(spark, sf_dir).collect()
+        release_caches()
+        return sorted((r.src, r.dst) for r in rows)
+
+    def neighbors():
+        rows = recommender.rec_item_neighbors(spark, sf_dir).collect()
+        release_caches()
+        return sorted(map(tuple, rows))
+
+    first, rec1 = edges(), neighbors()
     assert first and rec1
-    assert relation_cache._MEMO == {}, "query paths must not memoize"
-    root = relation_cache.table_root(sf_dir, "copurchase_plain")
-    assert not os.path.exists(os.path.dirname(root)), (
-        "query paths must not write persisted relations"
-    )
-
-
-def test_stale_derivation_tag_rebuilds(spark, sf_dir, cache_root):
-    """A derivation-code change (tag bump) must force a rebuild even
-    when the source data fingerprint is unchanged — otherwise a new
-    derivation silently serves the old persisted rows."""
-    import json as _json
-
-    from concurrent_etl_go_spark.operators import relation_cache
-
-    calls = {"n": 0}
-
-    def build():
-        calls["n"] += 1
-        return read_spark_range(spark)
-
-    def read_spark_range(s):
-        return s.range(3).selectExpr("id AS src", "id + 1 AS dst")
-
-    relation_cache.load_or_build(
-        spark, sf_dir, "tagged_rel", ("lineitem",), build, tag="v1"
-    )
-    relation_cache.load_or_build(
-        spark, sf_dir, "tagged_rel", ("lineitem",), build, tag="v1"
-    )
-    assert calls["n"] == 1, "same tag + same data must be a pure read"
-    relation_cache.load_or_build(
-        spark, sf_dir, "tagged_rel", ("lineitem",), build, tag="v2"
-    )
-    assert calls["n"] == 2, "a tag bump must force a rebuild"
-    meta_path = os.path.join(
-        relation_cache.table_root(sf_dir, "tagged_rel"), "meta.json"
-    )
-    with open(meta_path) as fh:
-        assert _json.load(fh)["tag"] == "v2"
+    assert edges() == first
+    assert neighbors() == rec1
 
 
 # ---------------------------------------------------------------------------
